@@ -684,6 +684,15 @@ _CLUSTER_LABELS_SQL = f"""
 """
 
 
+def _release_checkpoint(ckpt: DataFrame) -> None:
+    """Free a localCheckpoint()ed frame's blocks now. Left to the
+    ContextCleaner, a varying number of superseded rounds stayed
+    registered after each call (the JVM holds some plan references
+    past Python's and Java's GC). `ckpt` must be the frame
+    localCheckpoint returned, with no remaining consumer."""
+    ckpt._jdf.queryExecution().logical().rdd().unpersist(True)
+
+
 def min_label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     """Connected-component labels over an undirected pair graph —
     iterative min-label propagation (the Pregel/GraphX pattern as
@@ -695,8 +704,10 @@ def min_label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     bidirectional edge list and takes min(own, neighbors);
     convergence in ≤ graph diameter rounds. `localCheckpoint`
     truncates lineage per round — without it the plan doubles every
-    iteration. Driver involvement is one count() per round (the
-    convergence test), never the data. Returns (doc_id, cluster_id)
+    iteration — and each superseded round's checkpoint is freed as
+    soon as the next one is materialized, so one call leaves exactly
+    one (the returned labels). Driver involvement is one count() per
+    round (the convergence test), never the data. Returns (doc_id, cluster_id)
     for every vertex WITH at least one edge; callers re-attach
     singletons with a left join + coalesce(label, own id).
     The DuckDB oracle twin is the same fixpoint via a recursive CTE
@@ -709,7 +720,7 @@ def min_label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
         .toDF("src", "dst")
         .persist()
     )
-    labels = (
+    labels = ckpt = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("label", F.col("doc_id"))
@@ -746,6 +757,8 @@ def min_label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
                 )
                 .localCheckpoint(eager=True)
             )
+            _release_checkpoint(ckpt)
+            ckpt = updated
             n_changed = updated.filter("changed").count()
             labels = updated.select("doc_id", "label")
             if n_changed == 0:
@@ -753,8 +766,9 @@ def min_label_components(spark: SparkSession, pairs: DataFrame) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old_parts)
         # final labels are eagerly localCheckpointed — the edge cache
-        # has no further consumer (r14 persist-lifecycle audit)
-        edges.unpersist(blocking=False)
+        # has no further consumer (r14 persist-lifecycle audit);
+        # blocking, so the call's registry footprint is settled on return
+        edges.unpersist(blocking=True)
     return labels.select("doc_id", F.col("label").alias("cluster_id"))
 
 

@@ -50,29 +50,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# --- unrolled-dot knob (long-running-job codegen tradeoff) ---
-
-
-def unrolled_dot_enabled() -> bool:
-    """True when SPARK_GRAFT_UNROLLED_DOT=1: vector inner loops that
-    default to interpreted `F.aggregate` HOF folds (similarity
-    `_dot_dec`, clustering `_sqdiff_chain`) switch to UNROLLED
-    fixed-width expression chains that stay inside whole-stage
-    codegen. Values are bit-identical either way (decimal adds are
-    exact/associative; the double chains keep the fold's left
-    association), so oracle parity is knob-independent — only the
-    physical expression strategy flips. Default OFF because the
-    unrolled decimal trees cost multi-second Janino compiles PER PLAN
-    (measured ~15 s at k=8 in r9) that dominate short local runs; ON
-    for long-running jobs where compile amortizes to zero and the
-    per-row win is ~2-10x on dot-product-bound operators
-    (SCALING.md's knob section has the measured decade). Read per
-    call, not cached, so a session can flip it between plans."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_UNROLLED_DOT", "") == "1"
-
-
 def dlit_sql(v: float) -> str:
     """Exact double literal for generated SQL: a string cast parses
     via Double.parseDouble, so the shortest-round-trip repr recovers
@@ -275,21 +252,14 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
         sizes = [os.path.getsize(path)]
     if not sizes:
         return 0
-    def _bytes(v: str) -> int:
-        v = v.strip().lower()
-        for suf, mul in (
-            ("kb", 1 << 10), ("mb", 1 << 20), ("gb", 1 << 30),
-            ("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30), ("b", 1),
-        ):
-            if v.endswith(suf):
-                return int(v[: -len(suf)]) * mul
-        return int(v)
-
+    # Spark's own byte-string parser, so every legal form ("1t",
+    # "512kb", a bare byte count) reads the way Spark reads it
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
     conf = spark.conf
-    max_pb = _bytes(
+    max_pb = jutils.byteStringAsBytes(
         conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
-    open_cost = _bytes(
+    open_cost = jutils.byteStringAsBytes(
         conf.get("spark.sql.files.openCostInBytes", "4194304")
     )
     min_pn = conf.get("spark.sql.files.minPartitionNum", None)

@@ -1821,38 +1821,87 @@ def test_semdedup_verdict_consistency(spark):
     assert sum(r.n_dup_neighbors for r in rows) % 2 == 0
 
 
-def test_assign_join_matches_literal_assign(spark):
-    """The two nearest-centroid assignment strategies — literal
-    projection (small k, the pinned-oracle path) and broadcast-join
-    (k >= _JOIN_ASSIGN_MIN_K, the ns_semdedup_auto scale path) — must
-    be BIT-identical on the same centroids: same unrolled
-    left-associated double arithmetic, same (d2, j) tie-break. Run
-    both at a k on the join side of the flip and compare exactly."""
-    from .conftest import SF_ORACLE
+def _sql_fold_assign(em, cents):
+    """Parity reference for clustering._assign: the generated-SQL
+    struct-min it replaced — per centroid, the zip_with/aggregate
+    left fold of squared differences (_sqdiff_chain_sql), then
+    array_min over (d, j) structs, i.e. Spark's own ordering (NULL d
+    first, NaN above every double, ties to the smallest j)."""
     from flume_hive_batched_sink_spark.operators.clustering import (
-        _JOIN_ASSIGN_MIN_K,
-        _assign,
-        _assign_join,
+        _sqdiff_chain_sql,
     )
+
+    structs = ", ".join(
+        f"struct({_sqdiff_chain_sql('embedding', c)} as d, {int(j)} as j)"
+        for j, c in cents
+    )
+    m = F.expr(f"array_min(array({structs}))")
+    return em.select(
+        "vec_id", m.getField("j").alias("cl"), m.getField("d").alias("d2")
+    )
+
+
+def _cl_d2(df):
+    """{vec_id: (cl, d2 as an exact hex string)} — float.hex is
+    bit-exact for every double and folds all NaNs to 'nan'."""
+    return {
+        r.vec_id: (r.cl, None if r.d2 is None else r.d2.hex())
+        for r in df.select("vec_id", "cl", "d2").collect()
+    }
+
+
+def test_assign_matches_sql_fold_reference(spark):
+    """The vectorized nearest-centroid kernel (_assign) must be
+    BIT-identical to the generated-SQL HOF fold on the corpus: same
+    left-associated double arithmetic, same (d2, j) tie-break. Run at
+    k=15 (the ns_semdedup_auto geometry at the oracle SF) and compare
+    exactly."""
+    from .conftest import SF_ORACLE
+    from flume_hive_batched_sink_spark.operators.clustering import _assign
     from flume_hive_batched_sink_spark.operators.registry import tbl
 
-    k = _JOIN_ASSIGN_MIN_K + 3
+    k = 15
     em = tbl(spark, SF_ORACLE, "embeddings", parallel=True)
     cents = [
         (j, [float(v) for v in row.embedding])
         for j, row in enumerate(em.orderBy("vec_id").limit(k).collect())
     ]
-    lit = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
-    }
-    jn = {
-        r.vec_id: (r.cl, r.d2)
-        for r in _assign_join(em, cents)
-        .select("vec_id", "cl", "d2")
-        .collect()
-    }
-    assert lit == jn  # exact: same cluster AND bit-equal distance
+    # exact: same cluster AND bit-equal distance
+    assert _cl_d2(_assign(em, cents)) == _cl_d2(_sql_fold_assign(em, cents))
+
+
+def test_assign_degenerate_rows_match_sql_fold(spark):
+    """Degenerate inputs take the SQL fold's answer in the kernel:
+    a NaN centroid never captures a row (Spark orders NaN above every
+    double, np.argmin would pick it), +inf ties go to the smallest
+    id, and a NULL embedding, a NULL element or a length other than
+    the centroid width gives (smallest id, NULL). Reachable: initial
+    centroids are raw embeddings, so one NaN vector makes a NaN
+    centroid."""
+    from flume_hive_batched_sink_spark.operators.clustering import _assign
+
+    nan, inf = float("nan"), float("inf")
+    inner_null = [0.1] * 64
+    inner_null[5] = None
+    em = spark.createDataFrame(
+        [
+            (1, [0.1] * 64),  # clean
+            (2, [0.1] * 63 + [inf]),
+            (3, inner_null),
+            (4, None),
+            (5, [0.1] * 10),  # short
+            (6, [0.1] * 63 + [nan]),
+            (7, [0.1] * 65),  # long
+            (8, [0.2] * 64),  # exact hit on centroid 1
+        ],
+        "vec_id bigint, embedding array<float>",
+    )
+    cents = [(0, [0.0] * 64), (1, [0.2] * 64), (2, [nan] * 64)]
+    for cs in (cents, cents[:2], cents[::-1]):
+        got = _cl_d2(_assign(em, cs))
+        assert got == _cl_d2(_sql_fold_assign(em, cs)), cs[0][0]
+    got = _cl_d2(_assign(em, cents))
+    assert got[1][0] == 1 and got[2] == (0, "inf") and got[4] == (0, None)
 
 
 def test_assign_hier_bounded_vs_flat(spark):
@@ -1863,14 +1912,15 @@ def test_assign_hier_bounded_vs_flat(spark):
     the same centroids: (a) total membership preserved, (b) every
     assigned cl is a real centroid id, (c) no row BEATS the flat
     minimum (subset property — where the tree picks the same centroid
-    the d2 is bit-equal, since both levels use _sqdiff_cols), and
+    the d2 is bit-equal: _sqdiff_cols and the flat _assign kernel
+    compute the same left fold), and
     (d) total inertia within 1.25x of flat (measured 1.06x at k=64 on
     the near-orthogonal sf0.01 corpus — a worst-case-ish input for a
     2-level tree, since super-cells barely separate)."""
     from .conftest import SF_ORACLE
     from flume_hive_batched_sink_spark.operators.clustering import (
+        _assign,
         _assign_hier,
-        _assign_join,
     )
     from flume_hive_batched_sink_spark.operators.registry import tbl
 
@@ -1882,9 +1932,7 @@ def test_assign_hier_bounded_vs_flat(spark):
     ]
     flat = {
         r.vec_id: (r.cl, r.d2)
-        for r in _assign_join(em, cents)
-        .select("vec_id", "cl", "d2")
-        .collect()
+        for r in _assign(em, cents).select("vec_id", "cl", "d2").collect()
     }
     hier = {
         r.vec_id: (r.cl, r.d2)
@@ -2043,32 +2091,11 @@ def test_semdedup_components_contract(spark):
     assert len(keep_ids) < len(comp)
 
 
-def test_unrolled_dot_knob_bit_parity(spark, monkeypatch):
-    """SPARK_GRAFT_UNROLLED_DOT=1 flips the physical dot-product
-    strategy (interpreted HOF fold → codegen'd unrolled chain) and
-    must NOT flip a single bit of output: decimal adds are exact so
-    _dot_dec's balanced tree equals the left fold, and _sqdiff_chain's
-    unroll keeps left association. Pin it on the two consumer shapes:
-    a decimal-dot similarity op and the literal-centroid kmeans."""
-    from .conftest import SF_ORACLE
-
-    def run(name):
-        return sorted(
-            tuple(r) for r in QUERIES[name](spark, SF_ORACLE).collect()
-        )
-
-    for name in ("ns_similarity_topk", "ns_cluster_kmeans"):
-        monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-        off = run(name)
-        monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT", "1")
-        on = run(name)
-        monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-        assert off == on, name
-
-    # degenerate-array parity (r10 code review): equal-length-SHORT
-    # arrays must produce the fold's real sum on both strategies (the
-    # unrolled tree maps both-null tail terms to exact zeros), and a
-    # length-mismatched pair must poison to NULL on both
+def test_dot_dec_degenerate_arrays(spark):
+    """_dot_dec's degenerate-array contract (r10 code review):
+    equal-length-SHORT arrays produce their real sum, while a
+    length-mismatched pair and an in-range NULL element poison the
+    sum to NULL — zip_with's padding semantics."""
     from flume_hive_batched_sink_spark.operators.similarity import (
         _dot_dec,
     )
@@ -2083,14 +2110,8 @@ def test_unrolled_dot_knob_bit_parity(spark, monkeypatch):
         ],
         "a array<double>, b array<double>",
     )
-    def dots():
-        return [r[0] for r in df.select(_dot_dec(F.col("a"), F.col("b"))).collect()]
-    monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-    off = dots()
-    monkeypatch.setenv("SPARK_GRAFT_UNROLLED_DOT", "1")
-    on = dots()
-    monkeypatch.delenv("SPARK_GRAFT_UNROLLED_DOT", raising=False)
-    assert off == on == [1.5 * 2.0 * 52, None, None]
+    dots = [r[0] for r in df.select(_dot_dec(F.col("a"), F.col("b"))).collect()]
+    assert dots == [1.5 * 2.0 * 52, None, None]
 
 
 def test_semdedup_auto_k_derivation(spark):
@@ -5564,6 +5585,78 @@ def test_tbl_metadata_cache_identity_and_invalidation(spark):
         c = tbl(spark, tmp, "documents")
         assert c is not a  # mtime fingerprint invalidates
         assert c.count() == a.count()
+
+
+def test_tbl_accepts_any_spark_byte_string(spark):
+    """tbl()'s split estimate must read byte confs the way Spark does:
+    a legal spark.sql.files.maxPartitionBytes=1t (terabyte suffix)
+    used to make every tbl() raise ValueError."""
+    import os
+    import shutil
+    import tempfile
+
+    from flume_hive_batched_sink_spark.operators.registry import tbl
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key, None)
+    with tempfile.TemporaryDirectory() as tmp:
+        shutil.copy(
+            os.path.join(SF_SMALL, "documents.parquet"),
+            os.path.join(tmp, "documents.parquet"),
+        )
+        spark.conf.set(key, "1t")
+        try:
+            assert tbl(spark, tmp, "documents", parallel=True).count() > 0
+        finally:
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
+
+
+def test_package_reads_only_deployment_env_vars():
+    """Knob guard: the package's only environment inputs are the four
+    deployment settings. Every `environ` / `getenv` use in the source
+    is found; one whose key is not a string literal counts as
+    '<dynamic>' and fails too."""
+    import ast
+    import os
+
+    import flume_hive_batched_sink_spark as pkg
+
+    def is_env(node):
+        name = getattr(node, "attr", getattr(node, "id", None))
+        return name in ("environ", "getenv")
+
+    def key(node):
+        ok = isinstance(node, ast.Constant) and isinstance(node.value, str)
+        return node.value if ok else "<dynamic>"
+
+    found: set[str] = set()
+    for dirpath, _dirs, files in os.walk(os.path.dirname(pkg.__file__)):
+        for f in (f for f in files if f.endswith(".py")):
+            with open(os.path.join(dirpath, f)) as fh:
+                tree = ast.parse(fh.read())
+            keyed = set()  # env nodes whose key was read
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Subscript) and is_env(node.value):
+                    found.add(key(node.slice))  # environ["X"]
+                    keyed.add(id(node.value))
+                elif isinstance(node, ast.Call) and node.args:
+                    fn = node.func  # getenv("X") / environ.get("X")
+                    env = fn if is_env(fn) else getattr(fn, "value", None)
+                    if env is not None and is_env(env):
+                        found.add(key(node.args[0]))
+                        keyed.add(id(env))
+            for node in ast.walk(tree):
+                if is_env(node) and id(node) not in keyed:
+                    found.add("<dynamic>")
+    assert found == {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_DRIVER_MEMORY",
+        "SPARK_GRAFT_SF_DIR",
+        "SPARK_GRAFT_SCRATCH",
+    }, found
 
 
 def test_scan_split_estimate_matches_rdd_probe(spark):
